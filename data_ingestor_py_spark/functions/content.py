@@ -23,10 +23,6 @@ def content_sha256(col: str | Column = "content") -> Column:
     return F.sha2(c, 256)
 
 
-def with_content_hash(df: DataFrame, col: str = "content", out: str = "_content_sha256") -> DataFrame:
-    return df.withColumn(out, content_sha256(col))
-
-
 # DataType instance (not a DDL string) so the decorator does not require an
 # active SparkSession at import time.
 @pandas_udf(StringType())

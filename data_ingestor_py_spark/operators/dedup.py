@@ -1,4 +1,4 @@
-"""Exactly-once reductions: duplicate-event drop + max-sequence dedup (M2/M3).
+"""Exactly-once reductions: max-sequence dedup (M2/M3).
 
 The reference has *no* dedup — its tenacity retry around a partially
 committed batch (msgbroker/sql_consumer.py:155-156 + commit at
@@ -20,12 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def drop_duplicate_events(df: DataFrame, id_cols: list[str] | None = None) -> DataFrame:
-    """Drop exact replayed events (same (commit, _seq)) — the at-least-once
-    duplicates the reference's retry produces."""
-    return df.dropDuplicates(id_cols or ["commit", "_seq"])
 
 
 def _ordered_struct(df: DataFrame, seq_col: str, key_cols: list[str]):

@@ -103,9 +103,6 @@ class ApproxDistinct:
             F.hll_sketch_estimate("sketch").alias("n_approx"),
         )
 
-    def read_sketches(self) -> DataFrame:
-        return self.table.read().select(*self.group_cols, "sketch")
-
     def synced_version(self) -> int:
         done = self.cp.committed_batches()
         return max(done) if done else 0

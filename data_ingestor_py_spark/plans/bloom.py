@@ -38,8 +38,8 @@ Design (sharded — the round-6 rework of the one-JSON-per-column sidecar):
   false positives cost a read, never a wrong row; torn/corrupt shards
   degrade to no pruning.
 - **Probe hashing reuses the build's own Spark expressions** on a
-  1-row local DataFrame (metadata-scale job), so build and probe can
-  never disagree on the hash function.
+  local relation that Catalyst constant-folds while planning (no Spark
+  job), so build and probe can never disagree on the hash function.
 
 Reference parity note: no analogue in the reference (it has no scan
 layer at all); this is the engine-native version of what its warehouse
@@ -53,6 +53,8 @@ import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from data_ingestor_py_spark.session import local_frame
 
 DEFAULT_M = 1 << 16  # bits per file-filter (8 KiB dense; stored sparse)
 DEFAULT_K = 7
@@ -104,12 +106,13 @@ def probe_positions(
     same ``CAST(v AS STRING)`` the build hashed — str(python_value) is
     NOT that rendering (Java prints doubles as '1.23E7', booleans as
     'true'), so the typed round-trip is what keeps build and probe on
-    the same hash input. One local metadata-scale job."""
+    the same hash input. The values form a local relation, so Catalyst
+    folds the cast and the hashes while planning: no Spark job runs."""
     vals = [v for v in values if v is not None]
     if not vals:
         return {}
-    df = spark.createDataFrame(
-        [(str(v),) for v in sorted({str(v) for v in vals})], "v string"
+    df = local_frame(
+        spark, [(v,) for v in sorted({str(v) for v in vals})], "v string"
     ).select(F.col("v").cast(spark_type).alias("v")).where(F.col("v").isNotNull())
     rows = df.select(
         "v", F.array(*_positions_exprs(F.col("v"), m, k)).alias("ps")

@@ -3,11 +3,12 @@ DataFrames — Iceberg's ``.files`` / ``.history`` / ``.snapshots``
 metadata tables re-expressed over the engine's manifest + shards.
 
 Everything here is a driver-side METADATA read (manifest, stats shards,
-version objects) surfaced through ``createDataFrame`` — no data files
-are opened, so each call is O(metadata), never O(rows). That also means
-the outputs are plain queryable DataFrames: join ``files_df`` against a
-lineage read, aggregate dup ratios per bucket, feed ``history_df`` to a
-dashboard — without teaching any tool the manifest format.
+version objects) surfaced as a local relation (``session.local_frame``,
+so collecting it runs no Spark job) — no data files are opened, so each
+call is O(metadata), never O(rows). That also means the outputs are
+plain queryable DataFrames: join ``files_df`` against a lineage read,
+aggregate dup ratios per bucket, feed ``history_df`` to a dashboard —
+without teaching any tool the manifest format.
 
 Reference parity: the reference exposes its job log only as SQL-table
 rows (schema.sql:24-43, logger/sqllogger.py); these are the engine-side
@@ -22,6 +23,7 @@ import os
 from pyspark.sql import DataFrame
 
 from data_ingestor_py_spark.plans.target import TargetTable
+from data_ingestor_py_spark.session import local_frame
 
 __all__ = ["history_df", "files_df", "snapshots_df"]
 
@@ -57,7 +59,7 @@ def history_df(table: TargetTable) -> DataFrame:
                 json.dumps(extra, sort_keys=True) if extra else None,
             )
         )
-    return table.spark.createDataFrame(rows, _HISTORY_DDL)
+    return local_frame(table.spark, rows, _HISTORY_DDL)
 
 
 _FILES_DDL = (
@@ -109,7 +111,7 @@ def files_df(table: TargetTable) -> DataFrame:
         _entry_files(int(b), "base", e["path"])
         for i, d in enumerate(e.get("deltas", [])):
             _entry_files(int(b), f"delta:{i}", d["path"] if isinstance(d, dict) else d)
-    return table.spark.createDataFrame(rows, _FILES_DDL)
+    return local_frame(table.spark, rows, _FILES_DDL)
 
 
 _SNAP_DDL = (
@@ -152,4 +154,4 @@ def snapshots_df(table: TargetTable, last: int = 100) -> DataFrame:
                 vm.get("version") == m["version"],
             )
         )
-    return table.spark.createDataFrame(rows, _SNAP_DDL)
+    return local_frame(table.spark, rows, _SNAP_DDL)

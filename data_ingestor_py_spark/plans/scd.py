@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_ingestor_py_spark.plans.target import TargetTable, _bucket_expr
+from data_ingestor_py_spark.session import local_frame
 from data_ingestor_py_spark.storage import PosixStorage, StorageAdapter
 
 
@@ -360,7 +361,7 @@ class Scd2History:
         if segs is None:
             segs = self.closed_segments()
         if not segs:
-            return self.spark.createDataFrame([], self._closed_ddl(m))
+            return local_frame(self.spark, [], self._closed_ddl(m))
         by_schema: dict[int | None, list[str]] = {}
         for s in segs:
             by_schema.setdefault(self._seg_schema(os.path.basename(s)), []).append(s)
@@ -444,9 +445,14 @@ def scd2_apply(
     ).collect()
     if not brows:
         return Scd2Stats(0, 0, None, m["version"])
+    # a bucket whose rows all have a NULL seq has NULL bounds: fold only
+    # the others, as one global min/max would (it ignores NULLs)
+    bounded = [r for r in brows if r["lo"] is not None]
+    if not bounded:
+        raise ValueError(f"scd2_apply: every {seq_col} in the batch is NULL")
     rng = {
-        "lo": min(r["lo"] for r in brows),
-        "hi": max(r["hi"] for r in brows),
+        "lo": min(r["lo"] for r in bounded),
+        "hi": max(r["hi"] for r in bounded),
         "n": sum(r["n"] for r in brows),
     }
     touched = sorted(r["bkt"] for r in brows)

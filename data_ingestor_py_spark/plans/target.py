@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from data_ingestor_py_spark.operators.dedup import latest_by_key, salted_latest_by_key
 from data_ingestor_py_spark.plans import bloom, filestats
+from data_ingestor_py_spark.session import local_frame
 from data_ingestor_py_spark.storage import PosixStorage, StorageAdapter
 
 MANIFEST = "_manifest.json"
@@ -416,7 +417,7 @@ class TargetTable:
             + [f"`{f['name']}` {f['type']}" for f in fields]
             + [f"{m['seq_col']} long", "_op string", "_ts timestamp"]
         )
-        return self.spark.createDataFrame([], ddl)
+        return local_frame(self.spark, [], ddl)
 
     def _align(self, df: DataFrame, m: dict, written_version: int) -> DataFrame:
         """Project a file written under ``written_version`` to the current
@@ -1268,12 +1269,13 @@ class TargetTable:
         Scale shape: k probes read at most k bucket dirs out of B — at
         100 TB this is the O(table/B · k) point-read path a serving layer
         needs, vs read().where(...) scanning every bucket. Bucket ids come
-        from one probe-sized Spark job (the same ``xxhash64`` expression
-        the writer uses — never reimplemented driver-side, so probe and
-        data can't drift). The equality filter is pushed into the pruned
-        parquet scan for ≤64 probes; larger probe sets switch to a
-        broadcast semi-join (an IN-list that size stops being pushable
-        anyway)."""
+        from the writer's own ``xxhash64`` expression evaluated over the
+        probes as a local relation: Catalyst folds it while planning, so
+        routing runs no Spark job, and the hash is never reimplemented in
+        Python, so probe and data can't drift. The equality filter is
+        pushed into the pruned parquet scan for ≤64 probes; larger probe
+        sets switch to a broadcast semi-join (an IN-list that size stops
+        being pushable anyway)."""
         if not probes:
             raise ValueError("lookup needs at least one probe")
         m = self._load()
@@ -1293,16 +1295,13 @@ class TargetTable:
             {c: (None if p[c] is None else str(p[c])) for c in cols}
             for p in probes
         ]
-        probe_df = self.spark.createDataFrame(
-            [tuple(p[c] for c in cols) for p in norm],
+        probe_df = local_frame(
+            self.spark,
+            list(dict.fromkeys(tuple(p[c] for c in cols) for p in norm)),
             ", ".join(f"{c} string" for c in cols),
         )
-        bkts = sorted(
-            r["b"]
-            for r in probe_df.select(
-                _bucket_expr(bucket_cols, B).alias("b")
-            ).distinct().collect()
-        )
+        routed = probe_df.select(_bucket_expr(bucket_cols, B).alias("b")).collect()
+        bkts = sorted({r["b"] for r in routed})
         df = self._state_df(m, bkts).where(F.col("_op") != "D")
         if len(norm) <= 64:
             conds = []
@@ -1319,7 +1318,7 @@ class TargetTable:
             return df.where(cond)
         # null-safe equality, matching the <=64 path's isNull handling —
         # a plain equi-join would silently drop NULL-keyed matches
-        p = probe_df.distinct().alias("_probe")
+        p = probe_df.alias("_probe")
         d = df.alias("_data")
         cond = F.lit(True)
         for c in cols:

@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -53,3 +56,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """DataFrame over ``rows`` held in Python (tuples in the field order
+    of the ``ddl`` schema), built through a ``pyarrow.Table`` so it plans
+    as a ``LocalTableScan``: collecting it, or any projection Catalyst can
+    fold over it, runs zero Spark jobs. ``createDataFrame(list, ddl)`` instead
+    plans a Python-RDD scan that costs a job through Python workers even
+    for one row. Use it for metadata-sized rows only: the rows are
+    embedded in the query plan."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

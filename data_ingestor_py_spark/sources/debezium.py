@@ -335,13 +335,6 @@ def schema_change_schema() -> T.StructType:
     )
 
 
-def is_schema_change(value_col: str = "value") -> Column:
-    """Predicate: the line is a schema-change message (has a tableChanges
-    block or a ddl string — row envelopes have neither)."""
-    env = F.from_json(F.col(value_col), schema_change_schema())
-    return env["tableChanges"].isNotNull() | env["ddl"].isNotNull()
-
-
 def parse_schema_changes(
     df: DataFrame, value_col: str = "value", ts_ms_fallback: bool = True
 ) -> DataFrame:

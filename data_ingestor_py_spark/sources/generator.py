@@ -119,27 +119,3 @@ def change_events(
 def repo_files_seed(spark: SparkSession, n_rows: int, seed: int = 42, **kw) -> DataFrame:
     """Insert-only prefix stream usable as an initial table load."""
     return change_events(spark, n_rows, seed=seed, delete_rate=0.0, dup_rate=0.0, **kw)
-
-
-def events_as_cdc(events: DataFrame) -> DataFrame:
-    """Adapt the driver's ``events`` test table (event_id, ts, user_id,
-    event_type, value, props) into a CDC stream over key (user_id, k):
-    k = props.k, op = D for 'error' events else upsert. Used by the flagship
-    query and its DuckDB oracle."""
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    op = F.when(F.col("event_type") == "error", F.lit("D")).otherwise(F.lit("U"))
-    return events.select(
-        F.col("event_id"),
-        F.col("user_id").cast("string").alias("repo"),
-        k.cast("string").alias("path"),
-        F.sha2(F.concat_ws("|", F.col("event_id").cast("string")), 256).substr(1, 40).alias("commit"),
-        F.col("event_id").alias("_seq"),
-        op.alias("_op"),
-        F.col("ts").alias("_ts"),
-        F.col("event_type").alias("lang"),
-        F.when(op == "D", F.lit(None).cast("string"))
-        .otherwise(F.format_string("v=%.2f", F.col("value")))
-        .alias("content"),
-        F.lit(1).alias("_schema_version"),
-        F.col("value"),
-    )

@@ -66,10 +66,3 @@ class MappingSpec:
             if k in df.columns:
                 exprs.append(F.col(k))
         return df.select(*exprs)
-
-
-def spec_from_dict(mapping: dict[str, str], version: int = 1, dtype: str = "string") -> MappingSpec:
-    """Build a spec from a plain source-key -> target-column dict, the exact
-    shape of the reference control file's ``jsonSchema``/``xmlSchema``."""
-    cols = tuple(ColumnMapping(source=k, target=v, dtype=dtype) for k, v in mapping.items())
-    return MappingSpec(version=version, columns=cols)

@@ -239,6 +239,33 @@ def test_late_events_for_deleted_key_quarantined(spark):
     assert (("r1", "a", "go", "v3", 40, None) in rows) and len(rows) == 3
 
 
+def test_null_seq_bucket_skipped_in_range_fold(spark):
+    """A bucket whose rows all have a NULL seq reports NULL bounds; the
+    segment's seq range folds the other buckets only (as one global
+    min/max would) instead of raising TypeError."""
+    from data_ingestor_py_spark.plans.target import _bucket_expr
+
+    h = create_history_table(
+        spark, _mkroot(), KEYS, [("lang", "string"), ("content", "string")],
+        num_buckets=8,
+    )
+    ddl = ("repo string, path string, lang string, content string, "
+           "_seq long, _op string, _ts timestamp")
+    b = spark.createDataFrame(
+        [("r1", "a", "py", "v1", 10, "U", None),
+         ("r1", "a", "py", "v2", 20, "U", None),
+         ("r2", "b", "go", "w1", None, "U", None)], ddl,
+    ).withColumn("_ts", F.current_timestamp())
+    bkts = b.groupBy("repo", "path").agg(
+        F.first(_bucket_expr(KEYS, 8)).alias("bkt")
+    ).collect()
+    assert len({r["bkt"] for r in bkts}) == 2  # the NULL-seq key has its own bucket
+    st = scd2_apply(h, b, KEYS, PAY)
+    assert st.segment is not None
+    assert os.path.basename(st.segment).startswith(f"seg-{10:020d}-{20:020d}-3-")
+    assert ("r1", "a", "py", "v1", 10, 20) in _hist_rows(h)
+
+
 def test_history_follows_schema_evolution(spark):
     """Segments record their schema version; after open.evolve(rename=...)
     old segments are field-id-aligned, not silently NULLed."""

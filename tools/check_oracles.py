@@ -25,16 +25,48 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].map(lambda v: str(v) if v is not None else None)
         elif str(df[c].dtype).startswith("datetime64"):
             # Unit (ns vs us) is a pandas artifact the driver normalizes.
-            df[c] = df[c].astype("datetime64[ns]")
+            # as_unit keeps a tz-aware column tz-aware (astype to naive
+            # raises), so a tz skew fails the dtype check, not the run.
+            df[c] = df[c].dt.as_unit("ns")
         elif pd.api.types.is_integer_dtype(df[c].dtype):
             # Driver-calibrated dtype canonicalization (r6 evidence): width
             # skews (int32 vs int64) pass the driver hash on 15 green gates,
             # but the one int-vs-FLOAT skew (exact_substring_dedup n_spans)
-            # failed it. So: widen within the family, never across.
-            df[c] = df[c].astype("int64")
+            # failed it. So: widen within the family, never across. A
+            # nullable-int column holding NA stays nullable: int64 has no NA.
+            df[c] = df[c].astype("Int64" if df[c].hasnans else "int64")
         elif pd.api.types.is_float_dtype(df[c].dtype):
             df[c] = df[c].astype("float64")
     return df.sort_values(by=list(df.columns), na_position="first").reset_index(drop=True)
+
+
+def check_gate(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> bool:
+    """Compare one gate's Spark and DuckDB results, print its verdict line
+    and return whether it passed."""
+    a, b = canon(sdf), canon(odf)
+    if len(a) != len(b):
+        print(f"[FAIL-ROWS] {name}: spark={len(a)} duckdb={len(b)}")
+        return False
+    if list(a.columns) != list(b.columns):
+        print(f"[FAIL-COLS] {name}: spark={list(a.columns)} duckdb={list(b.columns)}")
+        return False
+    try:
+        # dtype-strict: the gate's row hash is dtype-sensitive, so a
+        # value-equal frame with a different physical dtype (int32 vs
+        # int64, int64 vs float64) fails the gate and must fail here
+        # too (r6 lesson: exact_substring_dedup n_spans/n_tokens).
+        pd.testing.assert_frame_equal(a, b, check_dtype=True, check_exact=True)
+    except AssertionError as e:
+        print(f"[FAIL-VALUES] {name}: {str(e).splitlines()[-1][:200]}")
+        neq = (a != b) & ~(a.isna() & b.isna())
+        bad_cols = [c for c in a.columns if neq[c].any()]
+        print("   diff cols:", bad_cols[:5])
+        for c in bad_cols[:2]:
+            idx = neq[c].idxmax()
+            print(f"   e.g. {c}[{idx}]: spark={a[c][idx]!r} duckdb={b[c][idx]!r}")
+        return False
+    print(f"[OK] {name}: {len(a)} rows")
+    return True
 
 
 def main() -> int:
@@ -71,30 +103,7 @@ def main() -> int:
             traceback.print_exc()
             fails.append(name)
             continue
-        a, b = canon(sdf), canon(odf)
-        if len(a) != len(b):
-            print(f"[FAIL-ROWS] {name}: spark={len(a)} duckdb={len(b)}")
-            fails.append(name)
-            continue
-        if list(a.columns) != list(b.columns):
-            print(f"[FAIL-COLS] {name}: spark={list(a.columns)} duckdb={list(b.columns)}")
-            fails.append(name)
-            continue
-        try:
-            # dtype-strict: the driver's row hash is dtype-sensitive, so a
-            # value-equal frame with a different physical dtype (int32 vs
-            # int64, int64 vs float64) is a driver FAIL and must fail here
-            # too (r6 lesson: exact_substring_dedup n_spans/n_tokens).
-            pd.testing.assert_frame_equal(a, b, check_dtype=True, check_exact=True)
-            print(f"[OK] {name}: {len(a)} rows")
-        except AssertionError as e:
-            print(f"[FAIL-VALUES] {name}: {str(e).splitlines()[-1][:200]}")
-            neq = (a != b) & ~(a.isna() & b.isna())
-            bad_cols = [c for c in a.columns if neq[c].any()]
-            print("   diff cols:", bad_cols[:5])
-            for c in bad_cols[:2]:
-                idx = neq[c].idxmax()
-                print(f"   e.g. {c}[{idx}]: spark={a[c][idx]!r} duckdb={b[c][idx]!r}")
+        if not check_gate(name, sdf, odf):
             fails.append(name)
     spark.stop()
     print(f"\n{'ALL OK' if not fails else 'FAILURES: ' + ', '.join(fails)}")
